@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -100,32 +100,82 @@ object Bench {
       baseWarm.exists(b => b > 0 && warm > 2 * b && warm > 2.0) ||
       baseWarm.exists(b => b > 0 && warm > 1.4 * b && warm > 3.0))
 
+  /** One measured execution of `name` (the Bench timed region, also
+    * `Probe time`'s): cache/checkpoint hygiene first (untimed), then
+    * the plan materialized through the noop sink. Shared by the main
+    * 3-run protocol and the end-of-suite noise retries so both measure
+    * exactly the same thing. Returns seconds, or -1 on failure. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String,
+      query: (SparkSession, String) => DataFrame): Double = {
+    // Drop cached frames from prior queries first: the dedup /
+    // similarity operators persist() intermediates and a suite-long
+    // session otherwise accumulates every query's cache — by the
+    // 60th query the executor heap is mostly stale cache and GC
+    // drag inflates the tail of the suite (measured: the d-family,
+    // benched last, ran 3x slower in a shared session than alone).
+    spark.catalog.clearCache()
+    // clearCache drops SQL-cached frames but NOT localCheckpoint
+    // RDD blocks (graph/closure/BPE queries checkpoint per
+    // iteration): those linger in storage memory until the
+    // ContextCleaner's next GC pass and starve execution memory —
+    // measured at 30x data as a 2.7x slowdown on g1 and the
+    // difference between fitting in heap and OOM. Prior runs'
+    // blocks are dead (each run rebuilds its plans from scratch),
+    // so dropping every persistent RDD between runs is safe.
+    // BLOCKING: the async form returns before the BlockManager
+    // frees anything, so at 30x the next run's first big sort
+    // races the cleaner for the same heap — the stage-754 OOM
+    // cascade in the first 30x regen. Untimed (before t0).
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val t0 = System.nanoTime()
+    // Materialize through the NOOP SINK (full distributed
+    // execution of the plan, rows consumed where they are
+    // produced), not collect(): a production consumer writes
+    // results to a sink, and for the pair-list queries the TRUE
+    // output grows with the corpus (d3 at the 30x step emits
+    // ~2.2M pairs — collect()ing that measured driver fetch and
+    // eventually OOM'd the harness, not the operator).
+    try {
+      query(spark, sfDir).write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      // -1 marks a failed query so its time-to-failure can't pass
+      // as a plausible fast result in the contract line
+      -1.0
+    }
+  }
+
+  /** Query names on the board, failing loudly on unknown ones. */
+  def requireKnown(names: Iterable[String], what: String): Unit = {
+    val unknown = names.toSet.diff(SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"$what names not on the board: ${unknown.toSeq.sorted.mkString(",")}")
+  }
+
+  /** The contract line: `header`, then the `entries` (name, seconds
+    * at 2 decimals) in order until the next one would take the line
+    * past `budget` chars. The cut stops at the FIRST entry that
+    * overflows, so the emitted set is always a prefix of the order —
+    * a shorter entry further down never slips in behind a dropped one. */
+  def contractLine(header: String, entries: Seq[(String, Double)],
+      budget: Int): String = {
+    val sb = new StringBuilder(header)
+    val it = entries.iterator
+    var fits = true
+    while (fits && it.hasNext) {
+      val (k, v) = it.next()
+      val entry = (if (sb.length == header.length) "" else ",") +
+        "\"" + k + f"\":$v%.2f"
+      fits = sb.length + entry.length + 2 <= budget
+      if (fits) sb.append(entry)
+    }
+    sb.append("}}").toString
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffles START wide (8x cores) and AQE coalesces them down to
-      // the advisory size: coalescing is free, but AQE can never
-      // SPLIT an oversized non-skew-join partition — with a flat 32
-      // at the 30x step every sort/join task carried 30x the state in
-      // one heap slice (the g2 OOM class). On a real cluster this is
-      // exactly the "partitions ~ 2-3x total cores, let AQE shrink"
-      // sizing rule; at sf0.01 the coalesced plan is unchanged.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the streaming parity queries use auto temp checkpoints; delete
-      // them on success and keep their INFO/WARN chatter out of the
-      // tail the driver parses the contract line from
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.session()
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming",
       org.apache.logging.log4j.Level.ERROR)
@@ -137,12 +187,7 @@ object Bench {
     // a silent drop would shrink BOTH fresh heavy artifacts in step
     // and slip past the gates' keyset-equality check.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    only.foreach { o =>
-      val unknown = o.diff(qs.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not on the board: " +
-          s"${unknown.toSeq.sorted.mkString(",")}")
-    }
+    only.foreach(requireKnown(_, "SPARK_GRAFT_BENCH_ONLY"))
     // FULL board: the headline shapes first (their relative order is
     // the stdout-contract-line priority), then every remaining
     // SparkEntry query in name order — a green oracle row without a
@@ -166,49 +211,7 @@ object Bench {
     // samples). The contract line totals WARM times; cold times ship
     // alongside in the full artifact so a cold-vs-warm gap reads as
     // JVM/compile amortization, not a plan regression.
-    // One measured execution of `name`: cache/checkpoint hygiene
-    // first (untimed), then the plan materialized through the noop
-    // sink. Shared by the main 3-run protocol and the end-of-suite
-    // noise retries so both measure exactly the same thing.
-    def runOnce(name: String): Double = {
-      // Drop cached frames from prior queries first: the dedup /
-      // similarity operators persist() intermediates and a suite-long
-      // session otherwise accumulates every query's cache — by the
-      // 60th query the executor heap is mostly stale cache and GC
-      // drag inflates the tail of the suite (measured: the d-family,
-      // benched last, ran 3x slower in a shared session than alone).
-      spark.catalog.clearCache()
-      // clearCache drops SQL-cached frames but NOT localCheckpoint
-      // RDD blocks (graph/closure/BPE queries checkpoint per
-      // iteration): those linger in storage memory until the
-      // ContextCleaner's next GC pass and starve execution memory —
-      // measured at 30x data as a 2.7x slowdown on g1 and the
-      // difference between fitting in heap and OOM. Prior runs'
-      // blocks are dead (each run rebuilds its plans from scratch),
-      // so dropping every persistent RDD between runs is safe.
-      // BLOCKING: the async form returns before the BlockManager
-      // frees anything, so at 30x the next run's first big sort
-      // races the cleaner for the same heap — the stage-754 OOM
-      // cascade in the first 30x regen. Untimed (before t0).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val t0 = System.nanoTime()
-      // Materialize through the NOOP SINK (full distributed
-      // execution of the plan, rows consumed where they are
-      // produced), not collect(): a production consumer writes
-      // results to a sink, and for the pair-list queries the TRUE
-      // output grows with the corpus (d3 at the 30x step emits
-      // ~2.2M pairs — collect()ing that measured driver fetch and
-      // eventually OOM'd the harness, not the operator).
-      try {
-        qs(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        // -1 marks a failed query so its time-to-failure can't pass
-        // as a plausible fast result in the contract line
-        -1.0
-      }
-    }
+    def run(name: String): Double = runOnce(spark, sfDir, name, qs(name))
 
     // Committed per-query baseline for host-contention detection:
     // read BEFORE the artifact write below can overwrite it. The
@@ -250,7 +253,7 @@ object Bench {
 
     val results = names.map { name =>
       // Cold/warm protocol: 3 runs; run 1 is COLD, warm = min of 2-3.
-      val times = (1 to 3).map(_ => runOnce(name))
+      val times = (1 to 3).map(_ => run(name))
       // A failure in ANY of the 3 runs marks BOTH phases -1: if cold
       // kept its time while warm went -1, cold_total and value would
       // aggregate different query sets and the documented cold-vs-warm
@@ -294,7 +297,7 @@ object Bench {
     if (suspects.nonEmpty)
       System.err.println(s"[bench] retrying ${suspects.size} suspect(s) " +
         s"(contention triggers vs committed $baselinePath): ${suspects.mkString(",")}")
-    val retries: Map[String, Double] = suspects.map(n => n -> runOnce(n)).toMap
+    val retries: Map[String, Double] = suspects.map(n => n -> run(n)).toMap
     def effWarm(name: String, warm: Double): Double =
       effectiveWarm(warm, retries.get(name))
     val total = results.map { case (n, _, w) =>
@@ -402,21 +405,15 @@ object Bench {
     // picture is one subtraction away, and `noisy` counts the
     // contention suspects that got a retry (details in the full file)
     val header = f"""{"metric":"total","value":$total%.3f,"cold_total":$coldTotal%.3f,"noisy":${retries.size},"unit":"sec","sf":"$sfDir","full":"$benchOut","queries":{"""
-    val sb = new StringBuilder(header)
-    var first = true
-    ordered.foreach { case (k, _, w) =>
-      val v = if (w >= 0) effWarm(k, w) else w
-      val entry = (if (first) "" else ",") + "\"" + k + f"\":$v%.2f"
-      if (sb.length + entry.length + 2 <= budget) { sb.append(entry); first = false }
-    }
-    sb.append("}}")
+    val line = contractLine(header, ordered.map { case (k, _, w) =>
+      k -> (if (w >= 0) effWarm(k, w) else w) }, budget)
     // Nothing may print after the contract line (the driver reads it
     // from a bounded tail window; a stop-time WARN landing after a
     // ~1950-char line would clip its head out of the window). Force
     // ERROR level before printing so spark.stop()'s shutdown path
     // stays silent.
     spark.sparkContext.setLogLevel("ERROR")
-    println(sb.toString)
+    println(line)
     System.out.flush()
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Measures the d-family pair-table checkpoint trade (round-9 verdict
@@ -17,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   *             caller's action pays the feature-pipeline recompute
   *             (both self-join sides re-shingle).
   *
-  * Same run protocol as [[Bench]] (cache hygiene, noop sink, 3 runs,
+  * Same run protocol as [[Bench]] ([[Bench.runOnce]], 3 runs,
   * warm = min of runs 2-3). Results go to COVERAGE.md's checkpoint-
   * trade table. Usage:
   * `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.DedupCkptBench"`.
@@ -28,33 +27,15 @@ object DedupCkptBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.session()
 
     val policies: Seq[(String, Option[StorageLevel])] = Seq(
       "ser" -> Some(StorageLevel.MEMORY_AND_DISK_SER),
       "deser" -> Some(StorageLevel.MEMORY_AND_DISK),
       "none" -> None)
 
-    def runOnce(name: String): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val qs = SparkEntry.queries
+    def runOnce(name: String): Double = Bench.runOnce(spark, sfDir, name, qs(name))
 
     // JVM warmup outside the measured sweep
     runOnce(queries.head)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Synthesize access-log day files (gzip TSV, one file per day dir —
   * the reference's log layout) from an sf testdata events table, so a
   * fresh deployment can exercise the FULL ETL → query path without
@@ -17,15 +15,7 @@ object LogGen {
     val outDir = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(1)
     val days = args.lift(3).map(_.toInt).getOrElse(30)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.session("ERROR")
     val n = EtlScaleBench.genDayFiles(spark, sfDir, outDir, copies, days)
     println(s"[loggen] $n records across $days day files under $outDir")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.export.Export
 import graft.model.Context
 import graft.query.QueryCompiler
@@ -45,15 +43,7 @@ object QueryCli {
       graft.api.ReportCache.lookup(d, graft.api.ReportCache.paramsOf(preCtx, view)))
     if (cached.isDefined) { println(cached.get); return }
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.session("ERROR")
 
     val ctx = preCtx
     // Load ONLY the requested datatype: opening every fact table would

@@ -434,8 +434,6 @@ object Dedup {
       var prevSum: Option[java.math.BigDecimal] = None
       var converged = false
       var i = 0
-      val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-      var tRound = System.nanoTime()
       while (!converged && i < maxIters) {
         // messages: my label, delivered to each neighbor; plus the
         // pointer jump label(label(id)) — path halving; the jumped-to
@@ -480,10 +478,6 @@ object Dedup {
         } else {
           labels.unpersist()
           labels = next
-        }
-        if (dbg) {
-          println(f"[cc] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s sum=$sumNow")
-          tRound = System.nanoTime()
         }
         i += 1
       }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.DataType
   * the same exact answer with every stage parallel, via two
   * interchangeable strategies (property-tested equal):
   *
-  * '''pinned''' (default): the bucket id is a PURE ROW FUNCTION —
-  * sample the sort key once (hash-top-k, a narrow column-pruned
-  * pass), pick ≤ p-1 boundary cut rows, and compile them into a
-  * codegen'd lexicographic-compare expression. Because every pass
+  * '''pinned''' (`withRowNumber` / `withPrefixSum` / `withNtile`):
+  * the bucket id is a PURE ROW FUNCTION — sample the sort key once
+  * (hash-top-k, a narrow column-pruned pass), pick ≤ p-1 boundary
+  * cut rows, and compile them into a codegen'd lexicographic-compare
+  * expression. Because every pass
   * derives the bucket from row VALUES, the per-bucket counts/offsets
   * and the final windowed join agree structurally — no shared
   * physical partition assignment to protect, hence NO CACHE. Cost
@@ -36,11 +37,7 @@ import org.apache.spark.sql.types.DataType
   * IS EXPENSIVE to recompute (the pinned form re-executes the
   * upstream plan for its two narrow passes; a heavy upstream
   * aggregation or join may dwarf the cache cost) — persist it
-  * explicitly or pick this strategy.
-  *
-  * Strategy selection: `GRAFT_RANK_STRATEGY` env /
-  * `graft.rank.strategy` system property (`pinned` | `persist`),
-  * default pinned.
+  * explicitly or call the `with*Persist` variant for that call.
   *
   * Ranks are total-order exact when the sort key is unique (pass a
   * tiebreaker column, as any deterministic global rank requires).
@@ -67,10 +64,6 @@ object GlobalRank {
     * construction (k post-limit rows, one row per shuffle partition);
     * the warning would be noise drowning out real regressions. */
   def onePartitionKey(c: Column): Column = pmod(c, lit(1))
-
-  private def chosenStrategy: String =
-    sys.env.getOrElse("GRAFT_RANK_STRATEGY",
-      System.getProperty("graft.rank.strategy", "pinned"))
 
   private def defaultP(df: DataFrame, partitions: Int): Int =
     if (partitions > 0) partitions
@@ -315,9 +308,9 @@ object GlobalRank {
   }
 
   // ---------------------------------------------------------------
-  // public API — strategy-dispatched
+  // public API — the pinned strategy
   //
-  // CALLER CONTRACT (pinned default): calling any of these launches
+  // CALLER CONTRACT: calling any of these launches
   // an EAGER Spark job at plan-construction time (the boundary
   // sample's executeCollect, bounded at ≤8,192 key tuples) and the
   // returned plan RE-EXECUTES the upstream for the two narrow
@@ -328,9 +321,9 @@ object GlobalRank {
   //      upstream first, or use the *Persist variants, which read one
   //      materialized assignment and are immune.
   //   2. An EXPENSIVE upstream (heavy aggregate/join) is recomputed
-  //      2× column-pruned + 1× full — persist it, or set
-  //      GRAFT_RANK_STRATEGY=persist, when that dominates.
-  // (Also in README "Exact global rank" — keep the two in sync.)
+  //      2× column-pruned + 1× full — persist it, or call the
+  //      *Persist variant, when that dominates.
+  // (Also in README "Global-rank strategies" — keep the two in sync.)
   // ---------------------------------------------------------------
 
   /** Append `out` = exact global row_number under `order`.
@@ -340,8 +333,7 @@ object GlobalRank {
     * [[withRowNumberPersist]]. */
   def withRowNumber(df: DataFrame, order: Seq[Column],
       out: String = "rn", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withRowNumberPersist(df, order, out, partitions)
-    else withRowNumberPinned(df, order, out, partitions)
+    withRowNumberPinned(df, order, out, partitions)
 
   /** Append `out` = exact global INCLUSIVE prefix sum of `value`
     * under `order` (`ROWS UNBOUNDED PRECEDING` semantics — exact when
@@ -351,8 +343,7 @@ object GlobalRank {
     * upstream re-executed — see [[withPrefixSumPersist]]). */
   def withPrefixSum(df: DataFrame, value: Column, order: Seq[Column],
       out: String = "cum", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withPrefixSumPersist(df, value, order, out, partitions)
-    else withPrefixSumPinned(df, value, order, out, partitions)
+    withPrefixSumPinned(df, value, order, out, partitions)
 
   /** Append `out` = exact NTILE(buckets) under `order` (SQL
     * semantics, same rows-per-bucket split as the window function).
@@ -360,6 +351,5 @@ object GlobalRank {
     * re-executed — see [[withNtilePersist]]). */
   def withNtile(df: DataFrame, buckets: Int, order: Seq[Column],
       out: String = "ntile", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withNtilePersist(df, buckets, order, out, partitions)
-    else withNtilePinned(df, buckets, order, out, partitions)
+    withNtilePinned(df, buckets, order, out, partitions)
 }

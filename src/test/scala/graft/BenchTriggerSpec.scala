@@ -124,4 +124,18 @@ class BenchTriggerSpec extends AnyFunSuite {
     assert(!Bench.contentionSuspect(cold = 0.9, warm = 0.74,
       baseCold = Some(0.5), baseWarm = Some(0.33)))
   }
+
+  test("contract line stops at the first entry over the char budget") {
+    val header = "{\"queries\":{"
+    val long = "x" * 40 -> 1.0
+    val short = "s" -> 2.0
+    val budget = header.length + 20
+    // the long entry overflows; the short one after it would fit but
+    // must not be emitted — the line is always a prefix of the order
+    assert(Bench.contractLine(header, Seq(long, short), budget) == header + "}}")
+    assert(Bench.contractLine(header, Seq(short, long), budget) ==
+      header + "\"s\":2.00}}")
+    assert(Bench.contractLine(header, Seq(short, short.copy(_1 = "t")), budget) ==
+      header + "\"s\":2.00,\"t\":2.00}}")
+  }
 }

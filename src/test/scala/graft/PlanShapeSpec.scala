@@ -831,14 +831,14 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wire once, hash-partitioned by the pure-function __pid for the
     // window); every row_number/sum window stays __pid-partitioned.
     //
-    // CALLER CONTRACT NOTE (README "Global-rank strategy knob" +
-    // GlobalRank dispatch scaladoc): the no-cache shape asserted here
+    // CALLER CONTRACT NOTE (README "Global-rank strategies" +
+    // GlobalRank caller-contract scaladoc): the no-cache shape asserted here
     // is exactly why the pinned form RE-EXECUTES the upstream for its
     // auxiliary passes and runs an eager boundary-sample job at plan
     // construction — an upstream with an unstable row multiset
     // (unseeded sample(), LIMIT without ORDER BY) must be persisted
-    // or routed to the persist strategy (next test), which is immune
-    // because its branches read one InMemoryRelation.
+    // or routed to the *Persist variants (next test), which are immune
+    // because their branches read one InMemoryRelation.
     for (q <- Seq("o10_rank_sample", "o11_weighted_sample", "o16_range_bounds")) {
       val p = plan(q)
       assert(!p.contains("InMemoryTableScan"),
